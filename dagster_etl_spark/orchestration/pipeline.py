@@ -9,10 +9,16 @@ Spark-first differences, by design:
   Catalyst pushes it into the scan — instead of string-appending WHERE
   to the source SQL (which breaks on queries that already have WHERE /
   ORDER BY; reference bug at etl/resources/rdb.py:97);
-* within a run, the handoff dict also carries the live DataFrame, so
-  downstream stages reuse the in-memory plan and the lake write is a
-  checkpoint, not the data path (the reference round-trips pandas
-  through S3 between every stage);
+* the committed lake checkpoint is the only data path between stages:
+  the handoff's ``"df"`` reads back the partition path just written,
+  so transfer and load scan the small lake partition instead of
+  re-running the source scan and upstream transforms, and in-run and
+  Dagster runs consume identical inputs (as the reference does,
+  round-tripping pandas through S3). A returned ``"df"`` is only
+  valid until that partition is re-run, which overwrites its files;
+* ``row_count`` is observed on the write itself
+  (:func:`~dagster_etl_spark.writers.upsert.observe_rows`), not
+  recounted by a separate job;
 * the load stage is the distributed keyed-upsert writer, not per-row
   DELETE + 1000-row INSERT literals.
 """
@@ -35,7 +41,14 @@ from dagster_etl_spark.orchestration.plugins import (
 )
 from dagster_etl_spark.sources import lake
 from dagster_etl_spark.sources.fixtures import load_table
-from dagster_etl_spark.writers.upsert import append_parquet, upsert_parquet, with_tenant
+from dagster_etl_spark.writers.upsert import (
+    append_parquet,
+    observe_rows,
+    observed_rows,
+    upsert_parquet,
+    with_tenant,
+    write_counted,
+)
 
 StepHook = Callable[[dict[str, Any]], None]
 
@@ -92,11 +105,7 @@ class PipelineRunner:
         lake_date = partition_date if p.date_column is not None else None
         if p.date_column is not None and partition_date is not None:
             df = df.filter(F.to_date(F.col(p.date_column)) == F.lit(partition_date))
-        path = lake.write_partition(
-            df, self.lake_base, self.tenant.tenant_id, "extract", p.name, lake_date
-        )
-        out = self._handoff(df, path, p, "extract", t0)
-        return out
+        return self._checkpoint(df, p, "extract", lake_date, t0)
 
     def transfer(
         self,
@@ -104,8 +113,8 @@ class PipelineRunner:
         partition_date: str | None,
         upstream: dict[str, dict[str, Any]],
     ) -> dict[str, Any]:
-        """U1 transfer function over named inputs; reads the in-run
-        DataFrames when available, else re-reads the lake checkpoint."""
+        """U1 transfer function over named inputs: the in-run extract
+        handoffs when given, else the lake checkpoints (the same data)."""
         t0 = time.time()
         inputs: dict[str, DataFrame] = {}
         for name in p.input_names:
@@ -127,10 +136,7 @@ class PipelineRunner:
         fn = resolve_transfer(self.tenant.tenant_id, p.transfer_fn_name)
         df = fn(inputs, partition_date or "latest", self.tenant.tenant_id)
         lake_date = partition_date if p.date_column is not None else None
-        path = lake.write_partition(
-            df, self.lake_base, self.tenant.tenant_id, "transfer", p.name, lake_date
-        )
-        return self._handoff(df, path, p, "transfer", t0)
+        return self._checkpoint(df, p, "transfer", lake_date, t0)
 
     def load(
         self, p: PipelineConfig, partition_date: str | None, staged: dict[str, Any]
@@ -148,9 +154,7 @@ class PipelineRunner:
         elif cfg.mode == "append":
             stats = {"deleted": 0, "inserted": append_parquet(df, target)}
         else:
-            n = df.count()
-            df.write.mode("overwrite").parquet(target)
-            stats = {"deleted": -1, "inserted": n}
+            stats = {"deleted": -1, "inserted": write_counted(df, target, "overwrite")}
         rec = {"df": df, "path": target, "row_count": stats["inserted"],
                "tenant_id": self.tenant.tenant_id, **stats}
         self.ctx.record(
@@ -209,12 +213,19 @@ class PipelineRunner:
 
     # -- internals ------------------------------------------------------------
 
-    def _handoff(
-        self, df: DataFrame, path: str, p: PipelineConfig, stage: str, t0: float
+    def _checkpoint(
+        self, df: DataFrame, p: PipelineConfig, stage: str, lake_date: str | None, t0: float
     ) -> dict[str, Any]:
-        n = self.spark.read.parquet(path).count()  # count the checkpoint, not the plan
+        """Commit ``df`` as the stage's lake partition and hand off a
+        read of that partition, counted by the write itself."""
+        written, rows = observe_rows(df)
+        path = lake.write_partition(
+            written, self.lake_base, self.tenant.tenant_id, stage, p.name, lake_date
+        )
+        n = observed_rows(rows)
         self.ctx.record(
             tenant=self.tenant.tenant_id, pipeline=p.name, stage=stage,
             status="success", rows=n, elapsed_sec=round(time.time() - t0, 3),
         )
-        return {"df": df, "path": path, "row_count": n, "tenant_id": self.tenant.tenant_id}
+        return {"df": self.spark.read.parquet(path), "path": path, "row_count": n,
+                "tenant_id": self.tenant.tenant_id}

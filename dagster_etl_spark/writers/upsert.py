@@ -19,9 +19,11 @@ Faithful semantics reproduced from the reference:
 
 from __future__ import annotations
 
+import threading
+from concurrent.futures import Future
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dagster_etl_spark.sources.lake import check_exists, delete_path, rename_or_raise
@@ -40,7 +42,51 @@ def null_safe_key_condition(left: DataFrame, right: DataFrame, keys: list[str]):
     )
 
 
-def upsert_keys_plan(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
+# how long a finished write may take to report its observed row count:
+# Spark completes an Observation from the listener bus, a few ms after
+# the action returns; the bound only turns a pruned observation into an
+# error instead of a hang
+OBSERVE_TIMEOUT_S = 120.0
+
+
+def observe_rows(
+    df: DataFrame, obs: Observation | None = None
+) -> tuple[DataFrame, Observation]:
+    """``df`` with a row counter attached: the action that consumes the
+    returned frame (a write) reports its row count, with no extra job.
+    Read it with :func:`observed_rows` after the action succeeds."""
+    obs = obs or Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
+def observed_rows(obs: Observation) -> int:
+    """The row count an :func:`observe_rows` frame saw in its first
+    action. Raises instead of blocking forever when the metric never
+    arrives — Spark drops it if the optimizer prunes the observed node
+    (an observed side of a join with an empty relation)."""
+    got: Future[int] = Future()
+
+    def fetch() -> None:
+        try:
+            got.set_result(int(obs.get["rows"]))
+        except Exception as exc:  # re-raised to the caller by got.result()
+            got.set_exception(exc)
+
+    threading.Thread(target=fetch, daemon=True).start()
+    return got.result(timeout=OBSERVE_TIMEOUT_S)
+
+
+def write_counted(df: DataFrame, path: str, mode: str) -> int:
+    """Write ``df`` as Parquet at ``path``; returns the rows written,
+    observed on the write itself."""
+    written, rows = observe_rows(df)
+    written.write.mode(mode).parquet(path)
+    return observed_rows(rows)
+
+
+def upsert_keys_plan(
+    target: DataFrame, source: DataFrame, keys: list[str], inserted: Observation | None = None
+) -> DataFrame:
     """Pure-plan upsert: target rows whose key is absent from source,
     plus ALL source rows (delete-then-insert semantics, S9).
 
@@ -49,12 +95,18 @@ def upsert_keys_plan(target: DataFrame, source: DataFrame, keys: list[str]) -> D
     never shuffles. At cluster scale with Iceberg this becomes
     ``MERGE INTO t USING s ON <null-safe keys> WHEN MATCHED THEN DELETE``
     + append, with partition-level file pruning.
+
+    ``inserted``, when given, counts the source rows on the union side
+    only, so the key-set branch's scan of the same source is not counted.
     """
     src_keys = source.select(*keys).distinct()
     kept = target.join(
         F.broadcast(src_keys), on=null_safe_key_condition(target, src_keys, keys), how="left_anti"
     )
-    return kept.unionByName(source.select(*target.columns))
+    batch = source.select(*target.columns)
+    if inserted is not None:
+        batch, _ = observe_rows(batch, inserted)
+    return kept.unionByName(batch)
 
 
 def upsert_parquet(
@@ -69,17 +121,23 @@ def upsert_parquet(
     Parquet is not transactional, so the merge materializes to a
     staging dir and swaps via rename — readers never see a partial
     state under the final path.
-    """
-    inserted = source.count()
-    if not check_exists(spark, path):
-        source.write.mode("overwrite").parquet(path)
-        return {"deleted": 0, "inserted": inserted}
 
-    target = spark.read.parquet(path)
-    before = target.count()
-    merged = upsert_keys_plan(target, source, keys)
+    The counts come from the merge write itself, with no count jobs:
+    ``before`` is observed on the target scan, ``inserted`` on the
+    source side of the union (each source row once, duplicates
+    included), ``after`` on the merged output, and
+    ``deleted = before + inserted - after``. The first write into a
+    missing path observes the source it writes.
+    """
+    if not check_exists(spark, path):
+        return {"deleted": 0, "inserted": write_counted(source, path, "overwrite")}
+
+    target, before = observe_rows(spark.read.parquet(path))
+    inserted = Observation()
+    merged, after = observe_rows(upsert_keys_plan(target, source, keys, inserted))
     staging = path.rstrip("/") + "__staging"
     merged.write.mode("overwrite").parquet(staging)
+    n_before, n_inserted, n_after = map(observed_rows, (before, inserted, after))
 
     # rename-aside swap: the old data survives (as __old) until the new
     # data is in place, so a crash mid-swap never loses the target —
@@ -99,9 +157,7 @@ def upsert_parquet(
         raise IOError(f"merged data missing at {path} after swap; old copy kept")
     fs.delete(old_p, True)
 
-    after = spark.read.parquet(path).count()
-    deleted = before + inserted - after
-    return {"deleted": int(deleted), "inserted": int(inserted)}
+    return {"deleted": n_before + n_inserted - n_after, "inserted": n_inserted}
 
 
 def _fs(spark: SparkSession, path: str):
@@ -111,10 +167,9 @@ def _fs(spark: SparkSession, path: str):
 
 
 def append_parquet(source: DataFrame, path: str) -> int:
-    """S8 batch insert -> distributed append (no literal rendering)."""
-    n = source.count()
-    source.write.mode("append").parquet(path)
-    return n
+    """S8 batch insert -> distributed append (no literal rendering);
+    returns the rows the append wrote."""
+    return write_counted(source, path, "append")
 
 
 def truncate_parquet(spark: SparkSession, path: str) -> None:
@@ -175,11 +230,11 @@ def execute_upsert_dml(
 
 def _dml_rowcount(cursor) -> int:
     """Affected-row count from a DB-API DML result. DuckDB surfaces it
-    as a one-row ``Count`` result set; others via ``rowcount``."""
-    try:
-        rows = cursor.fetchall()
-        if rows and len(rows[0]) == 1:
-            return int(rows[0][0])
-    except Exception:
-        pass
-    return int(getattr(cursor, "rowcount", -1))
+    as a one-row ``Count`` result set; drivers without a result set
+    (``description is None``) report it via ``rowcount``."""
+    if cursor.description is None:
+        return int(cursor.rowcount)
+    rows = cursor.fetchall()
+    if len(rows) != 1 or len(rows[0]) != 1:
+        raise ValueError(f"DML count result must be one row of one column, got {rows!r}")
+    return int(rows[0][0])

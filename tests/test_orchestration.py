@@ -91,6 +91,50 @@ def test_lake_path_contract(run_result):
     }
 
 
+def test_stages_read_the_committed_checkpoint(spark, run_result):
+    """Transfer and load consume the lake partition the upstream stage
+    committed, never a live plan over the fixture source, and every
+    stage's row_count is the row count of what it wrote."""
+    runner, results, base = run_result
+    lake_base = str(base / "lake")
+    for name, stages in results.items():
+        for stage in ("transfer", "load"):
+            if stage not in stages:
+                continue
+            files = stages[stage]["df"].inputFiles()
+            assert files, (name, stage)
+            for f in files:
+                assert lake_base in f and SF_SMALL not in f, (name, stage, f)
+        for stage, out in stages.items():
+            assert out["row_count"] == spark.read.parquet(out["path"]).count(), (name, stage)
+
+
+def test_run_partition_job_count_tripwire(spark, tenant, tmp_path):
+    """Re-running one partition (extract, transfer and the upsert merge
+    branch of load) launches 23 Spark jobs on local[4]; the
+    ceiling is that plus 10%. A live-plan handoff with a recount job per
+    write measured 53."""
+    measured = 23
+    ceiling = int(measured * 1.1)  # 25
+    from dagster_etl_spark.orchestration import PipelineRunner
+
+    runner = PipelineRunner(
+        spark, tenant, source_dir=SF_SMALL,
+        lake_base=str(tmp_path / "lake"), warehouse_base=str(tmp_path / "wh"),
+    )
+    runner.run_partition(PARTITION)  # first run creates the upsert targets
+    sc = spark.sparkContext
+    group = "run_partition_job_count"
+    sc.setJobGroup(group, "job-count tripwire")
+    try:
+        runner.run_partition(PARTITION)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs <= ceiling, (jobs, measured)
+
+
 def test_transfer_matches_direct_operator(spark, run_result):
     from pyspark.sql import functions as F
 

@@ -10,7 +10,7 @@ frames, unicode text.
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # one Spark action per example → keep examples few and frames small
@@ -58,6 +58,41 @@ def test_upsert_plan_properties(spark, target, source):
         spark.createDataFrame(merged, schema=schema), src, ["k1", "k2"]
     ).collect()
     assert nsort(map(tuple, twice)) == merged_set
+
+
+@given(target=st.one_of(st.none(), rows), source=rows, no_partitions=st.booleans())
+@example(target=None, source=[(1, 1, 5), (1, 1, 6)], no_partitions=False)  # first write
+@example(target=[(None, 1, 1), (2, None, 2), (3, 3, 3)],
+         source=[(None, 1, 9), (None, 1, 8), (2, 2, 7)], no_partitions=False)
+@example(target=[(1, 1, 1)], source=[], no_partitions=False)  # empty batch
+@example(target=[(1, 1, 1)], source=[], no_partitions=True)  # 0-partition batch
+@example(target=None, source=[], no_partitions=True)
+@settings(**SETTINGS)
+def test_upsert_parquet_stats_match_recount(spark, tmp_path, target, source, no_partitions):
+    """The counts ``upsert_parquet`` observes on its write equal a
+    recount: ``deleted`` is the target rows whose key null-safely
+    matches a batch key, ``inserted`` every batch row (duplicates
+    included, each once although the batch feeds two plan branches).
+    ``target=None`` is the first write into a missing path."""
+    import uuid
+
+    from dagster_etl_spark.writers.upsert import upsert_parquet
+
+    schema = "k1 int, k2 int, v int"
+    path = str(tmp_path / uuid.uuid4().hex)
+    if target is not None:
+        spark.createDataFrame(target, schema=schema).write.parquet(path)
+    if no_partitions and not source:
+        src = spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+    else:
+        src = spark.createDataFrame(source, schema=schema)
+
+    stats = upsert_parquet(spark, src, path, ["k1", "k2"])
+
+    src_keys = {(r[0], r[1]) for r in source}
+    kept = [r for r in target or [] if (r[0], r[1]) not in src_keys]
+    assert stats == {"deleted": len(target or []) - len(kept), "inserted": len(source)}
+    assert nsort(map(tuple, spark.read.parquet(path).collect())) == nsort(kept + source)
 
 
 @given(

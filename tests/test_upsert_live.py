@@ -94,6 +94,29 @@ def test_execute_upsert_dml_live_duckdb(tmp_path):
     con.close()
 
 
+def test_execute_upsert_dml_rowcount_driver():
+    """A driver whose DML returns no result set (sqlite3:
+    ``description is None``) reports the affected rows via
+    ``rowcount``; the stats match DuckDB's count-result path."""
+    import sqlite3
+
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE wip (lot_id TEXT, step INT, qty REAL, note TEXT)")
+    con.execute("CREATE TABLE wip_staging (lot_id TEXT, step INT, qty REAL, note TEXT)")
+    con.executemany("INSERT INTO wip VALUES (?, ?, ?, ?)", TARGET)
+    con.executemany("INSERT INTO wip_staging VALUES (?, ?, ?, ?)", SOURCE)
+    con.commit()
+
+    stats = execute_upsert_dml(con, "wip", "wip_staging", KEYS, COLS)
+    assert stats == {"deleted": 2, "inserted": 4}
+    got = sorted(
+        con.execute("SELECT * FROM wip").fetchall(),
+        key=lambda r: (str(r[0]), r[1], r[2]),
+    )
+    assert got == _expected_final()
+    con.close()
+
+
 def test_spark_to_live_warehouse_upsert(tmp_path):
     """Full pipeline shape: Spark computes the batch and lands it in
     the warehouse staging table over JDBC (live S8 append), the DML
