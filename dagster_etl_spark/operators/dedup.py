@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from dagster_etl_spark.functions import xdialect as x
 from dagster_etl_spark.plans.cache import pin, track
 from dagster_etl_spark.plans.layout import spread
+from dagster_etl_spark.streaming.slicestore import SlicedIndex, slice_file_budget
 
 
 # -- exact dedup -------------------------------------------------------------
@@ -1668,7 +1669,7 @@ def semantic_dedup(
 
 # -- incremental near-dup index ------------------------------------------------
 
-class IncrementalNearDupIndex:
+class IncrementalNearDupIndex(SlicedIndex):
     """Daily-cadence MinHash+LSH near-dup (the dedup analog of
     sources/bucketed.BucketedPipeline): a 100 TB crawl doesn't re-pair
     the whole corpus per ingest — it bands the NEW slice once, probes
@@ -1720,6 +1721,11 @@ class IncrementalNearDupIndex:
         self.num_hashes = num_hashes
         self.bands = bands
         self.num_buckets = num_buckets
+        self.components = (
+            ("bands", self.bands_table, ["bkey"]),
+            ("hashes", self.hashes_table, [id_col]),
+            ("pairs", self.pairs_table, None),
+        )
 
     # -- encoding (same expression chain as minhash_neardup_pairs) --
 
@@ -1796,75 +1802,19 @@ class IncrementalNearDupIndex:
         minhash_neardup_pairs' self-join pin — because two actions
         consume it (the index append and the probe): the probe then
         reads ~4 cached rows/doc instead of re-running the whole
-        chain, cutting the per-ingest chain executions from 3 to 2."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
+        chain, cutting the per-ingest chain executions from 3 to 2.
+        The pin is released before returning: both consumers have run
+        by then, so nothing is left cached for the session."""
         new_bands, new_hashes = self._encode(docs)
-        new_bands = pin(new_bands)
-        first = not self.spark.catalog.tableExists(self.bands_table)
-        if first:
-            # fresh index: clear any previous-session leftovers for
-            # ALL THREE tables (write_bucketed cleans its own two; the
-            # plain pairs table needs the same orphaned-location
-            # treatment — the round driver restarts the session, so
-            # the catalog forgets tables whose directories survive)
-            from dagster_etl_spark.sources.lake import delete_path
-
-            self.drop()
-            warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(
-                self.spark, f"{warehouse}/{self.pairs_table.lower()}"
+        new_bands.persist()
+        try:
+            fresh = self._write_base(
+                {"bands": new_bands, "hashes": new_hashes}, reset=True
             )
-            write_bucketed(
-                new_bands, self.bands_table, ["bkey"], num_buckets=self.num_buckets
-            )
-            write_bucketed(
-                new_hashes,
-                self.hashes_table,
-                [self.id_col],
-                num_buckets=self.num_buckets,
-            )
-        else:
-            append_bucketed(new_bands, self.bands_table)
-            append_bucketed(new_hashes, self.hashes_table)
-
-        pairs = self._probe_pairs(new_bands, threshold)
-        pairs.write.mode("append" if not first else "overwrite").saveAsTable(
-            self.pairs_table
-        )
-
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py)."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.bands_table.lower()}__slices")
-
-    def _merged(
-        self, spark, component: str, table: str, extra: DataFrame | None = None
-    ) -> DataFrame | None:
-        """Base table ∪ committed slices (∪ ``extra``, the current
-        slice's own staged rows during an ingest probe)."""
-        store = self._slice_store()
-        parts: list[DataFrame] = []
-        if spark.catalog.tableExists(table):
-            spark.catalog.refreshTable(table)
-            parts.append(spark.table(table))
-        delta = store.read(spark, component)
-        if delta is not None:
-            parts.append(delta)
-        if extra is not None:
-            parts.append(extra)
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            pairs = self._probe_pairs(new_bands, threshold)
+            self._write_base({"pairs": pairs}, fresh=fresh)
+        finally:
+            new_bands.unpersist()
 
     def ingest_slice(
         self,
@@ -1873,25 +1823,15 @@ class IncrementalNearDupIndex:
         threshold: float = 0.2,
         fault_hook=None,
     ) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        (``slice_id`` = the foreachBatch batch id). Crash-safe at any
-        point (see streaming/slicestore.py): bands/hashes/pairs land in
-        overwrite-mode slice directories and become visible only at the
-        atomic manifest commit; a replay of a committed slice is a
-        no-op. The probe view is committed state ∪ this slice's own
-        staged bands — identical on a replay, because the crashed
-        attempt never committed — so the pair-completeness invariant
-        (every pair found on the batch where its later member arrives,
-        never re-found) survives a kill at any point.
-        tests/test_streaming_recovery.py kills and restarts for real.
+        """:meth:`SlicedIndex.ingest_slice` with the pair ``threshold``.
+        The probe view is committed state ∪ this slice's own staged
+        bands — identical on a replay, because the crashed attempt never
+        committed — so the pair-completeness invariant (every pair found
+        on the batch where its later member arrives, never re-found)
+        survives a kill at any point."""
+        return self._commit_slice(docs, slice_id, fault_hook, threshold=threshold)
 
-        ``fault_hook(label)`` is a test-only injection point."""
-        from dagster_etl_spark.streaming.slicestore import slice_file_budget
-
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        hook = fault_hook or (lambda _label: None)
+    def _stage_slice(self, docs, slice_id, stage, threshold) -> None:
         spark = docs.sparkSession
         n_files = slice_file_budget(docs)
         # r19 (guide §1.2): stage hashes FIRST — the tokenize+shingle+
@@ -1900,80 +1840,21 @@ class IncrementalNearDupIndex:
         # each of the two component writes. Replay-identical: a replay
         # rewrites the same deterministic hashes, and the band tail is
         # a pure function of them.
-        store.write("hashes", slice_id, self._hashes(docs), files=n_files)
-        hook("staged_hashes")
-        new_bands = self._bands_from_hashes(
-            store.read_slice(spark, "hashes", slice_id)
-        )
-        store.write("bands", slice_id, new_bands, files=n_files)
-        hook("staged_bands")
-        slice_bands = store.read_slice(spark, "bands", slice_id)
-        index_bands = self._merged(
-            spark, "bands", self.bands_table, extra=slice_bands
-        )
-        index_hashes = self._merged(
-            spark,
-            "hashes",
-            self.hashes_table,
-            extra=store.read_slice(spark, "hashes", slice_id),
-        )
+        stage("hashes", self._hashes(docs), n_files)
+        hashes = self._staged(spark, "hashes", slice_id)
+        stage("bands", self._bands_from_hashes(hashes), n_files)
+        slice_bands = self._staged(spark, "bands", slice_id)
         pairs = self._probe_pairs(
             slice_bands,
             threshold,
-            index_bands=index_bands,
-            index_hashes=index_hashes,
+            index_bands=self._standing("bands", slice_bands, spark),
+            index_hashes=self._standing(
+                "hashes", self._staged(spark, "hashes", slice_id), spark
+            ),
         )
         # pairs is a shuffle (dropDuplicates/join) output — AQE already
         # coalesces its write to slice-sized files, no budget needed
-        store.write("pairs", slice_id, pairs)
-        hook("staged_pairs")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
-
-    def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed base tables and
-        clear the region, restoring the pure co-located probe plan.
-        Returns the number of slices folded. Same crash-window caveat
-        as IncrementalBM25Index.compact_slices: production = one ACID
-        table commit; locally run once, post-stream."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        spark = self.spark
-        bands = store.read(spark, "bands")
-        hashes = store.read(spark, "hashes")
-        pairs = store.read(spark, "pairs")
-        first = not spark.catalog.tableExists(self.bands_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            warehouse = spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(spark, f"{warehouse}/{self.pairs_table.lower()}")
-            write_bucketed(
-                bands, self.bands_table, ["bkey"], num_buckets=self.num_buckets
-            )
-            write_bucketed(
-                hashes,
-                self.hashes_table,
-                [self.id_col],
-                num_buckets=self.num_buckets,
-            )
-            if pairs is not None:
-                pairs.write.mode("overwrite").saveAsTable(self.pairs_table)
-        else:
-            append_bucketed(bands, self.bands_table)
-            append_bucketed(hashes, self.hashes_table)
-            if pairs is not None:
-                pairs.write.mode("append").saveAsTable(self.pairs_table)
-        store.clear()
-        return n
+        stage("pairs", pairs)
 
     def _probe_pairs(
         self,
@@ -2091,20 +1972,6 @@ class IncrementalNearDupIndex:
             .filter(F.col("jaccard") >= threshold)
         )
 
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Maintenance cadence: every ingest appends up to num_buckets
-        files to each bucketed table (a streaming deployment appends
-        per MICRO-BATCH — fragmentation is fastest exactly where this
-        index earns its keep); collapse them without touching the
-        bucket spec, so the probe join stays co-located. Returns
-        {table: (files_before, files_after)}."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {
-            t: compact_bucketed(self.spark, t)
-            for t in (self.bands_table, self.hashes_table)
-        }
-
     def pairs(self) -> DataFrame:
         """All pairs found so far (id_a < id_b, exact Jaccard).
 
@@ -2121,17 +1988,12 @@ class IncrementalNearDupIndex:
         base read when no slice region exists — the batch-built plan
         is unchanged); ingest_slice-built state is fully visible
         before any compact_slices fold."""
-        merged = self._merged(self.spark, "pairs", self.pairs_table)
+        merged = self._standing("pairs")
         if merged is None:
             return self.spark.createDataFrame(
                 [], "id_a BIGINT, id_b BIGINT, jaccard DOUBLE"
             )
         return merged
-
-    def drop(self) -> None:
-        for t in (self.bands_table, self.hashes_table, self.pairs_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
 
 
 def dedup_self_repeats(

@@ -20,6 +20,7 @@ from pyspark.sql.window import Window
 
 from dagster_etl_spark.functions import xdialect as x
 from dagster_etl_spark.plans.layout import spread
+from dagster_etl_spark.streaming.slicestore import SlicedIndex, slice_file_budget
 
 
 def cosine_topk(
@@ -822,7 +823,7 @@ def ivf_pq_topk(
 
 # -- incremental ANN index -------------------------------------------------
 
-class IncrementalANNIndex:
+class IncrementalANNIndex(SlicedIndex):
     """Daily-cadence IVF (the ANN member of the r11 incremental
     trilogy, next to sources/bucketed.BucketedPipeline and
     dedup.IncrementalNearDupIndex): an embedding store grows by a
@@ -882,6 +883,7 @@ class IncrementalANNIndex:
         self.id_col = id_col
         self.vec_col = vec_col
         self.num_buckets = num_buckets
+        self.components = (("vectors", self.vectors_table, ["bucket"]),)
 
     # -- state --
 
@@ -937,48 +939,13 @@ class IncrementalANNIndex:
             self._assign(vectors, self._centroids()), self.vectors_table
         )
 
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py)."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.vectors_table.lower()}__slices")
-
-    def ingest_slice(self, vectors: DataFrame, slice_id: int, fault_hook=None) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        (r17 — with this the ENTIRE incremental-index family is slice-
-        store-backed: BM25, near-dup, unigram-LM, DSIR, IVF-PQ, and the
-        float IVF here). Requires :meth:`init` to have frozen the
-        quantizer first; assignment is a pure function of it, so a
-        replay rewrites identical rows. Committed replays return False
-        and apply nothing."""
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        hook = fault_hook or (lambda _label: None)
-        # _assign is scan-local with no spread: partitioning = the
-        # micro-batch's own splits, already slice-sized — no budget
-        assigned = self._assign(vectors, self._centroids())
-        store.write("vectors", slice_id, assigned)
-        hook("staged_vectors")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
-
-    def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed vectors table
-        and clear the region (post-stream, one fold — see the BM25
-        compact_slices caveat). Returns the number of slices folded."""
-        from dagster_etl_spark.sources.bucketed import append_bucketed
-
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        append_bucketed(store.read(self.spark, "vectors"), self.vectors_table)
-        store.clear()
-        return n
+    def _stage_slice(self, vectors, slice_id, stage) -> None:
+        """Requires :meth:`init` to have frozen the quantizer first;
+        assignment is a pure function of it, so a replay rewrites
+        identical rows. ``_assign`` is scan-local with no spread:
+        partitioning = the micro-batch's own splits, already
+        slice-sized — no file budget."""
+        stage("vectors", self._assign(vectors, self._centroids()))
 
     def topk(
         self, queries: DataFrame, k: int = 10, nprobe: int = 8
@@ -987,13 +954,7 @@ class IncrementalANNIndex:
         nprobe nearest lists per query, cosine-rank within them.
         Same result columns and tie-breaks as ivf_cosine_topk."""
         cents = self._centroids()
-        # refresh: appends from other sessions (foreachBatch clones)
-        # don't invalidate this session's relation cache
-        self.spark.catalog.refreshTable(self.vectors_table)
-        standing = self.spark.table(self.vectors_table)
-        delta = self._slice_store().read(self.spark, "vectors")
-        if delta is not None:
-            standing = standing.unionByName(delta)
+        (standing,) = self._state("vectors")
         c = standing.select(
             F.col(self.id_col).alias("neighbor_id"),
             F.col(self.vec_col).alias("cv"),
@@ -1017,17 +978,9 @@ class IncrementalANNIndex:
             "rank", F.row_number().over(w)
         ).filter(F.col("rank") <= k)
 
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Maintenance cadence: collapse the per-append vector files
-        (spec preserved). Returns {table: (files_before, files_after)}."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {self.vectors_table: compact_bucketed(self.spark, self.vectors_table)}
-
     def drop(self) -> None:
-        for t in (self.centroids_table, self.vectors_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
+        self.spark.sql(f"DROP TABLE IF EXISTS {self.centroids_table}")
+        super().drop()
 
 
 def ivf_nlist_for(n_vectors: int) -> int:
@@ -1044,7 +997,7 @@ def ivf_nlist_for(n_vectors: int) -> int:
     return nlist
 
 
-class IncrementalIVFPQIndex:
+class IncrementalIVFPQIndex(SlicedIndex):
     """Daily-cadence IVF-PQ — the incremental form of :func:`ivf_pq_topk`
     and the fourth member of the incremental family (next to
     BucketedPipeline, IncrementalNearDupIndex, IncrementalANNIndex):
@@ -1117,6 +1070,7 @@ class IncrementalIVFPQIndex:
         self.id_col = id_col
         self.vec_col = vec_col
         self.num_buckets = num_buckets
+        self.components = (("codes", self.codes_table, ["bucket"]),)
 
     @classmethod
     def sized_for(
@@ -1228,83 +1182,25 @@ class IncrementalIVFPQIndex:
     def append(self, vectors: DataFrame) -> None:
         """Ingest a slice: encode ONLY the new rows against the frozen
         quantizers and append into the bucketed codes layout.
-
-        Pre-r16 codes tables (written before encode-time ``rn``) are
-        handled in place: the encoded slice drops its rn column so the
-        append schema matches, and :meth:`topk` recomputes rn in-plan
-        for such tables (r16 ADVICE — no forced rebuild). Batch-grain
-        path — inside foreachBatch use :meth:`ingest_slice`, which is
-        idempotent under checkpoint replay."""
+        Batch-grain path — inside foreachBatch use :meth:`ingest_slice`,
+        which is idempotent under checkpoint replay."""
         from dagster_etl_spark.sources.bucketed import append_bucketed
 
         self.recover_rebucket()  # don't append onto a half-swapped index
         coded = self._encode(vectors, self._centroids(), self._books())
-        if "rn" not in self.spark.table(self.codes_table).columns:
-            coded = coded.drop("rn")
         append_bucketed(coded, self.codes_table)
 
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py)."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.codes_table.lower()}__slices")
-
-    def ingest_slice(self, vectors: DataFrame, slice_id: int, fault_hook=None) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        — the ANN member of the slice-store family (r17; BM25, near-dup,
-        unigram-LM and DSIR got theirs in r16-r17): a standing embedding
-        store fed by a stream must not double-encode a checkpoint-
-        replayed batch. Requires :meth:`init` to have frozen the
-        quantizers first (encode is a pure function of them, so a replay
-        rewrites identical code rows). Same protocol as the others:
-        overwrite-mode slice staging, atomic manifest commit, committed
-        replays return False and apply nothing."""
+    def _stage_slice(self, vectors, slice_id, stage) -> None:
+        """Requires :meth:`init` to have frozen the quantizers first
+        (encode is a pure function of them, so a replay rewrites
+        identical code rows)."""
         self.recover_rebucket()  # uniform self-heal (see append/topk)
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        from dagster_etl_spark.streaming.slicestore import slice_file_budget
-
-        hook = fault_hook or (lambda _label: None)
         coded = self._encode(vectors, self._centroids(), self._books())
-        store.write("codes", slice_id, coded, files=slice_file_budget(vectors))
-        hook("staged_codes")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
+        stage("codes", coded, slice_file_budget(vectors))
 
     def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed codes table
-        and clear the region (post-stream, one fold — see the BM25
-        compact_slices caveat). Returns the number of slices folded."""
-        from dagster_etl_spark.sources.bucketed import append_bucketed
-
         self.recover_rebucket()  # uniform self-heal (see append/topk)
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        delta = store.read(self.spark, "codes")
-        if "rn" not in self.spark.table(self.codes_table).columns:
-            delta = delta.drop("rn")
-        append_bucketed(delta, self.codes_table)
-        store.clear()
-        return n
-
-    def _codes(self) -> DataFrame:
-        """Standing codes = bucketed base table ∪ committed slice
-        deltas (plain refreshed read when no slice region exists —
-        the pre-slice co-located plan is unchanged)."""
-        self.spark.catalog.refreshTable(self.codes_table)
-        base = self.spark.table(self.codes_table)
-        delta = self._slice_store().read(self.spark, "codes")
-        if delta is None:
-            return base
-        if "rn" not in base.columns:
-            delta = delta.drop("rn")
-        return base.unionByName(delta)
+        return super().compact_slices()
 
     def topk(
         self,
@@ -1327,7 +1223,7 @@ class IncrementalIVFPQIndex:
         self.recover_rebucket()  # self-heal an interrupted swap (one stat)
         cents = self._centroids()
         books = self._books()
-        all_codes = self._codes()  # base ∪ committed slice deltas
+        (all_codes,) = self._state("codes")  # base ∪ committed slices
         if rerank is None and rerank_source is not None:
             rerank = max(500, all_codes.count() // 200)
         recon = pq_reconstruct_expr(
@@ -1351,21 +1247,11 @@ class IncrementalIVFPQIndex:
         probed = sorted(
             r.bucket for r in q.select("bucket").distinct().collect()
         )
-        codes = all_codes
-        # Pre-r16 codes tables lack the encode-time rn column (r16
-        # ADVICE): recompute it in-plan from the same reconstruction —
-        # identical fold, identical value, just paid per probe instead
-        # of once at ingest.
-        rn_expr = (
-            "rn" if "rn" in codes.columns
-            else x.norm_fold(f"({recon})", x.SPARK)
-        )
         c = (
-            codes
+            all_codes
             .filter(F.col("bucket").isin(probed))
             .selectExpr(
-                f"{self.id_col} AS neighbor_id", "bucket",
-                f"{recon} AS rv", f"{rn_expr} AS rn",
+                f"{self.id_col} AS neighbor_id", "bucket", f"{recon} AS rv", "rn"
             )
         )
         adc = f"({x.dot_fold('qv', 'rv', x.SPARK)} / nullif(qn * rn, 0.0d))"
@@ -1407,12 +1293,6 @@ class IncrementalIVFPQIndex:
         return rescored.withColumn("rank", F.row_number().over(w)).filter(
             F.col("rank") <= k
         )
-
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Collapse the per-append code files (spec preserved)."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {self.codes_table: compact_bucketed(self.spark, self.codes_table)}
 
     def rebucket(
         self, vectors: DataFrame, nlist: int, fault_hook=None
@@ -1625,7 +1505,7 @@ class IncrementalIVFPQIndex:
         The 2x threshold gives hysteresis: the trigger fires only after
         a full doubling past the rule, so daily calls never thrash."""
         self.recover_rebucket()
-        n = self._codes().count()
+        n = self._state("codes")[0].count()
         if n <= self.nlist * max_per_list:
             return None
         target = ivf_nlist_for(n)
@@ -1635,9 +1515,9 @@ class IncrementalIVFPQIndex:
         return target
 
     def drop(self) -> None:
-        for t in (self.centroids_table, self.codebooks_table, self.codes_table):
+        for t in (self.centroids_table, self.codebooks_table):
             self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
+        super().drop()
         self._clear_rb_marker()
 
 

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from dagster_etl_spark.functions import xdialect as x
 from dagster_etl_spark.plans.cache import pin
 from dagster_etl_spark.plans.layout import spread
+from dagster_etl_spark.streaming.slicestore import SlicedIndex
 
 # Tiny built-in stopword list (English function words); real deployments
 # pass their own.
@@ -779,7 +780,7 @@ FROM ranked WHERE rank <= {k}
 """
 
 
-class IncrementalBM25Index:
+class IncrementalBM25Index(SlicedIndex):
     """Daily-cadence BM25 — the retrieval analog of
     IncrementalNearDupIndex and the fifth incremental surface (next to
     BucketedPipeline, near-dup, ANN, IVF-PQ): a production search
@@ -825,10 +826,15 @@ class IncrementalBM25Index:
         self.id_col = id_col
         self.num_buckets = num_buckets
         self.scale = scale
+        self.components = (
+            ("postings", self.postings_table, ["term"]),
+            ("df", self.df_table, ["term"]),
+            ("totals", self.totals_table, None),
+        )
 
-    def _encode(self, docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """(postings, partial_df, totals) for one slice — one tokenize
-        pass, same expressions as the one-shot operator."""
+    def _encode(self, docs: DataFrame) -> dict[str, DataFrame]:
+        """{postings, df, totals} for one slice — one tokenize pass, same
+        expressions as the one-shot operator."""
         g = docs.selectExpr(
             self.id_col, f"{x.tokens(self.text_col, x.SPARK)} AS _t"
         ).selectExpr(
@@ -846,169 +852,49 @@ class IncrementalBM25Index:
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.sum("dl").cast("long").alias("total_tokens"),
         )
-        return postings, partial_df, totals
+        return {"postings": postings, "df": partial_df, "totals": totals}
 
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py). Lives next to the base tables in the
-        warehouse so drop()/rebuild semantics match."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.postings_table.lower()}__slices")
-
-    def ingest_slice(self, docs: DataFrame, slice_id: int, fault_hook=None) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        (``slice_id`` = the foreachBatch batch id). Crash-safe at any
-        point: components land in overwrite-mode slice directories (a
-        replay rewrites them with identical rows — _encode is
-        deterministic), and the slice becomes visible only at the
-        atomic manifest commit. A replay of an already-committed slice
-        returns False and applies nothing, so recovery from a kill at
-        any point yields state bit-identical to an uninterrupted run
-        (tests/test_streaming_recovery.py kills and restarts for real).
-
-        ``fault_hook(label)`` is a test-only injection point called
-        after each staging step and after the commit."""
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        hook = fault_hook or (lambda _label: None)
+    def _stage_slice(self, docs, slice_id, stage) -> None:
+        """Precondition, enforced before anything is staged: ``doc_id``
+        is unique within the slice. The staged df below counts postings
+        rows per term, which equals the number of distinct documents
+        only when no doc_id repeats (zero-token documents have no
+        postings and are fine)."""
+        n_ids, n_distinct = docs.agg(
+            F.count(self.id_col), F.countDistinct(self.id_col)
+        ).first()
+        if n_ids != n_distinct:
+            raise ValueError(
+                f"IncrementalBM25Index.ingest_slice: slice {slice_id} repeats "
+                f"{self.id_col} ({n_ids} ids, {n_distinct} distinct)"
+            )
         # no explicit file budget here: all three components are
         # aggregate outputs, whose trailing shuffle AQE already
         # coalesces to slice-sized files (measured: 1 part-file as-is;
         # a repartition would only add a shuffle). The budget is for
         # spread()-wide scan-local chains — see slice_file_budget.
-        postings, partial_df, totals = self._encode(docs)
-        store.write("postings", slice_id, postings)
-        hook("staged_postings")
+        enc = self._encode(docs)
+        stage("postings", enc["postings"])
         # derive df from the STAGED postings slice instead of a second
         # explode+aggregate over the token arrays (r19, guide §1.2):
         # (term, doc_id) is unique in postings (it is the aggregate's
-        # group key, dl functional on doc_id), so COUNT(*) per term
-        # over the staged file equals the encode's countDistinct
-        # value-for-value. Replay-identical: a replay rewrites the
-        # same deterministic postings and re-derives the same df.
-        spark = docs.sparkSession
-        staged = store.read_slice(spark, "postings", slice_id)
+        # group key, dl functional on doc_id, doc_id unique per slice),
+        # so COUNT(*) per term over the staged file equals the encode's
+        # countDistinct value-for-value. Replay-identical: a replay
+        # rewrites the same deterministic postings and re-derives the
+        # same df.
+        staged = self._staged(docs.sparkSession, "postings", slice_id)
         partial_df = staged.groupBy("term").agg(
             F.count(F.lit(1)).cast("long").alias("df")
         )
-        store.write("df", slice_id, partial_df)
-        hook("staged_df")
-        store.write("totals", slice_id, totals)
-        hook("staged_totals")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
-
-    def _state(self, spark) -> tuple[DataFrame, DataFrame, DataFrame]:
-        """(postings, partial_df, totals) = bucketed base tables union
-        committed slice deltas. With no slice region this is EXACTLY
-        the plain refreshed table read — the pre-slice plan (bucketed
-        co-located probe) is unchanged for batch-built indexes; slice
-        deltas ride along unbucketed until compact_slices folds them."""
-        store = self._slice_store()
-        out: list[DataFrame] = []
-        for t, comp in (
-            (self.postings_table, "postings"),
-            (self.df_table, "df"),
-            (self.totals_table, "totals"),
-        ):
-            base = None
-            if spark.catalog.tableExists(t):
-                spark.catalog.refreshTable(t)
-                base = spark.table(t)
-            delta = store.read(spark, comp)
-            if base is not None and delta is not None:
-                out.append(base.unionByName(delta))
-            elif base is not None:
-                out.append(base)
-            elif delta is not None:
-                out.append(delta)
-            else:
-                raise ValueError(
-                    f"IncrementalBM25Index: no state for {t} — neither a "
-                    "base table nor a committed slice exists"
-                )
-        return out[0], out[1], out[2]
-
-    def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed base tables and
-        clear the region, restoring the pure co-located query plan.
-        Returns the number of slices folded. Batch-grain step: the
-        window between the base append and the region clear is not
-        crash-safe on plain parquet (a rerun would double-fold) — in
-        production this fold is one ACID table commit (Iceberg/Delta);
-        locally run it once, post-stream."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        spark = self.spark
-        postings = store.read(spark, "postings")
-        partial_df = store.read(spark, "df")
-        totals = store.read(spark, "totals")
-        first = not spark.catalog.tableExists(self.postings_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            warehouse = spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(spark, f"{warehouse}/{self.totals_table.lower()}")
-            write_bucketed(
-                postings, self.postings_table, ["term"],
-                num_buckets=self.num_buckets,
-            )
-            write_bucketed(
-                partial_df, self.df_table, ["term"],
-                num_buckets=self.num_buckets,
-            )
-            totals.write.mode("overwrite").saveAsTable(self.totals_table)
-        else:
-            append_bucketed(postings, self.postings_table)
-            append_bucketed(partial_df, self.df_table)
-            totals.write.mode("append").saveAsTable(self.totals_table)
-        store.clear()
-        return n
+        stage("df", partial_df)
+        stage("totals", enc["totals"])
 
     def ingest(self, docs: DataFrame) -> None:
         """Absorb one day's slice: append its postings, partial dfs,
         and totals row. O(slice) — the corpus tables are append-only
         and never rewritten (compact() collapses small files)."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
-        postings, partial_df, totals = self._encode(docs)
-        first = not self.spark.catalog.tableExists(self.postings_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            self.drop()
-            warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(
-                self.spark, f"{warehouse}/{self.totals_table.lower()}"
-            )
-            write_bucketed(
-                postings, self.postings_table, ["term"],
-                num_buckets=self.num_buckets,
-            )
-            write_bucketed(
-                partial_df, self.df_table, ["term"],
-                num_buckets=self.num_buckets,
-            )
-        else:
-            append_bucketed(postings, self.postings_table)
-            append_bucketed(partial_df, self.df_table)
-        totals.write.mode("overwrite" if first else "append").saveAsTable(
-            self.totals_table
-        )
+        self._write_base(self._encode(docs), reset=True)
 
     def topk(
         self,
@@ -1054,7 +940,9 @@ class IncrementalBM25Index:
         from pyspark.sql.window import Window
 
         spark = queries.sparkSession
-        postings, raw_df, totals_state = self._state(spark)
+        postings, raw_df, totals_state = self._state(
+            "postings", "df", "totals", spark=spark
+        )
         qt = (
             queries.selectExpr(
                 f"{self.id_col} AS query_id",
@@ -1122,20 +1010,6 @@ class IncrementalBM25Index:
                 "rank",
             )
         )
-
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Collapse accumulated per-append files; bucket specs survive."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {
-            t: compact_bucketed(self.spark, t)
-            for t in (self.postings_table, self.df_table)
-        }
-
-    def drop(self) -> None:
-        for t in (self.postings_table, self.df_table, self.totals_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
 
 
 # -- CCNet-style unigram-LM perplexity buckets --------------------------------
@@ -1584,7 +1458,7 @@ FROM per_slice
 """
 
 
-class IncrementalUnigramLM:
+class IncrementalUnigramLM(SlicedIndex):
     """Daily-cadence unigram LM — the sixth incremental surface (next
     to BucketedPipeline, near-dup, ANN, IVF-PQ, BM25): the corpus
     language model behind perplexity bucketing and drift telemetry
@@ -1635,6 +1509,10 @@ class IncrementalUnigramLM:
         self.id_col = id_col
         self.num_buckets = num_buckets
         self.scale = scale
+        self.components = (
+            ("counts", self.counts_table, ["term"]),
+            ("totals", self.totals_table, None),
+        )
 
     def _tokenized(self, docs: DataFrame) -> DataFrame:
         return docs.selectExpr(
@@ -1643,8 +1521,8 @@ class IncrementalUnigramLM:
             self.id_col, f"CAST({x.xsize('_t', x.SPARK)} AS BIGINT) AS dl", "_t"
         )
 
-    def _encode(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(counts, totals) for one slice — one tokenize pass, the same
+    def _encode(self, docs: DataFrame) -> dict[str, DataFrame]:
+        """{counts, totals} for one slice — one tokenize pass, the same
         expressions whether the slice arrives via the batch ``ingest``
         or the exactly-once ``ingest_slice`` (determinism is what makes
         a replayed slice rewrite identical rows)."""
@@ -1656,137 +1534,29 @@ class IncrementalUnigramLM:
             F.sum("dl").cast("long").alias("n_total"),
             F.count(F.lit(1)).cast("long").alias("n_docs"),
         )
-        return counts, totals
+        return {"counts": counts, "totals": totals}
 
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py). Lives next to the base tables in the
-        warehouse so drop()/rebuild semantics match."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.counts_table.lower()}__slices")
-
-    def ingest_slice(self, docs: DataFrame, slice_id: int, fault_hook=None) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        (``slice_id`` = the foreachBatch batch id) — the r17 closure of
-        the replay double-count window the r16 verdict flagged:
-        ``streaming/drift_monitor.py`` used the plain-append ``ingest``
-        inside foreachBatch, so a checkpoint-replayed batch
-        double-counted the standing LM. Same protocol as
-        IncrementalBM25Index.ingest_slice: components land in
-        overwrite-mode slice directories (a replay rewrites identical
-        rows — _encode is deterministic), the slice becomes visible at
-        the atomic manifest commit, and a replay of a committed slice
-        returns False and applies nothing.
-
-        ``fault_hook(label)`` is a test-only injection point called
-        after each staging step and after the commit."""
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        hook = fault_hook or (lambda _label: None)
+    def _stage_slice(self, docs, slice_id, stage) -> None:
         # aggregate outputs: AQE already coalesces their writes (see
-        # the BM25 ingest_slice note) — no explicit file budget
-        counts, totals = self._encode(docs)
-        store.write("counts", slice_id, counts)
-        hook("staged_counts")
-        store.write("totals", slice_id, totals)
-        hook("staged_totals")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
-
-    def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed base tables and
-        clear the region (same contract and caveat as the BM25 fold:
-        locally run once post-stream; in production this fold is one
-        ACID table commit). Returns the number of slices folded."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        counts = store.read(self.spark, "counts")
-        totals = store.read(self.spark, "totals")
-        first = not self.spark.catalog.tableExists(self.counts_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(self.spark, f"{warehouse}/{self.totals_table.lower()}")
-            write_bucketed(
-                counts, self.counts_table, ["term"], num_buckets=self.num_buckets
-            )
-            totals.write.mode("overwrite").saveAsTable(self.totals_table)
-        else:
-            append_bucketed(counts, self.counts_table)
-            totals.write.mode("append").saveAsTable(self.totals_table)
-        store.clear()
-        return n
+        # the BM25 note) — no explicit file budget
+        for component, df in self._encode(docs).items():
+            stage(component, df)
 
     def ingest(self, docs: DataFrame) -> None:
         """Absorb one slice: append its term counts and a totals row.
         O(slice); standing tables are append-only (compact() collapses
         the per-append files). Batch-grain path — inside foreachBatch
         use :meth:`ingest_slice`, which is idempotent under replay."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
+        self._write_base(self._encode(docs), reset=True)
 
-        counts, totals = self._encode(docs)
-        first = not self.spark.catalog.tableExists(self.counts_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            self.drop()
-            warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(self.spark, f"{warehouse}/{self.totals_table.lower()}")
-            write_bucketed(
-                counts, self.counts_table, ["term"], num_buckets=self.num_buckets
-            )
-        else:
-            append_bucketed(counts, self.counts_table)
-        totals.write.mode("overwrite" if first else "append").saveAsTable(
-            self.totals_table
-        )
-
-    def _standing(self) -> tuple[DataFrame, DataFrame]:
-        """Summed standing state = bucketed base tables ∪ committed
-        slice deltas (the BM25 _state pattern): with no slice region
-        this is exactly the plain refreshed table read, and slice
-        deltas ride along unbucketed until compact_slices folds them."""
-        store = self._slice_store()
-        parts: list[DataFrame] = []
-        for t, comp in (
-            (self.counts_table, "counts"),
-            (self.totals_table, "totals"),
-        ):
-            base = None
-            if self.spark.catalog.tableExists(t):
-                self.spark.catalog.refreshTable(t)
-                base = self.spark.table(t)
-            delta = store.read(self.spark, comp)
-            if base is not None and delta is not None:
-                parts.append(base.unionByName(delta))
-            elif base is not None:
-                parts.append(base)
-            elif delta is not None:
-                parts.append(delta)
-            else:
-                raise ValueError(
-                    f"IncrementalUnigramLM: no state for {t} — neither a "
-                    "base table nor a committed slice exists"
-                )
-        ct = parts[0].groupBy("term").agg(
+    def _summed(self) -> tuple[DataFrame, DataFrame]:
+        """Summed standing state (ct per term, corpus totals) over the
+        base tables ∪ committed slice deltas."""
+        counts, totals = self._state("counts", "totals")
+        ct = counts.groupBy("term").agg(
             F.sum("ct").cast("long").alias("ct")
         )
-        tot = parts[1].agg(
+        tot = totals.agg(
             F.sum("n_total").cast("long").alias("n_total"),
             F.sum("n_docs").cast("long").alias("n_docs"),
         )
@@ -1802,7 +1572,7 @@ class IncrementalUnigramLM:
         seen singleton, the standard out-of-vocabulary clamp."""
         from pyspark.sql.window import Window
 
-        ctd, tot = self._standing()
+        ctd, tot = self._summed()
         g = self._tokenized(docs).filter("dl > 0")
         ex = g.select(self.id_col, "dl", F.explode("_t").alias("term"))
         tf = ex.groupBy(self.id_col, "dl", "term").agg(
@@ -1872,7 +1642,7 @@ class IncrementalUnigramLM:
         state. Works for both ingested frames (drift of each slice vs
         the corpus it is part of) and unseen feeds (ct=0 terms stay in
         the present sum)."""
-        ctd, tot = self._standing()
+        ctd, tot = self._summed()
         ex = docs.selectExpr(
             f"{slice_col} AS slice",
             f"explode({x.tokens(self.text_col, x.SPARK)}) AS term",
@@ -1901,17 +1671,6 @@ class IncrementalUnigramLM:
             f"CAST((CAST({tv_scale} AS BIGINT) * (present + n_l * (n_total - s_l)))"
             f" DIV (2 * n_total * n_l) AS DOUBLE) / CAST({tv_scale} AS DOUBLE) AS tv",
         )
-
-    def compact(self) -> dict[str, tuple[int, int]]:
-        """Collapse accumulated per-append files; bucket spec survives."""
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {self.counts_table: compact_bucketed(self.spark, self.counts_table)}
-
-    def drop(self) -> None:
-        for t in (self.counts_table, self.totals_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
 
 
 def bigram_surprisal_buckets(
@@ -2072,7 +1831,7 @@ FROM docsc d CROSS JOIN thr
 """
 
 
-class IncrementalDSIRModel:
+class IncrementalDSIRModel(SlicedIndex):
     """Daily-cadence DSIR — the seventh incremental surface: the
     importance model behind :func:`dsir_select` (hashed-bigram target
     and raw distributions) must absorb a crawl slice in O(slice), and
@@ -2119,6 +1878,10 @@ class IncrementalDSIRModel:
         self.id_col = id_col
         self.lang_col = lang_col
         self.num_buckets = num_buckets
+        self.components = (
+            ("counts", self.counts_table, ["fb"]),
+            ("totals", self.totals_table, None),
+        )
 
     def _features(self, docs: DataFrame) -> DataFrame:
         s = x.SPARK
@@ -2134,8 +1897,8 @@ class IncrementalDSIRModel:
             )
         )
 
-    def _encode(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(counts, totals) for one slice — one feature pass, shared by
+    def _encode(self, docs: DataFrame) -> dict[str, DataFrame]:
+        """{counts, totals} for one slice — one feature pass, shared by
         the batch ``ingest`` and the exactly-once ``ingest_slice``
         (deterministic, so a replayed slice rewrites identical rows)."""
         is_t = F.col(self.lang_col) == self.target_lang
@@ -2148,125 +1911,29 @@ class IncrementalDSIRModel:
             F.sum(F.when(is_t, 1).otherwise(0)).cast("long").alias("t_tot"),
             F.sum(F.when(is_t, 0).otherwise(1)).cast("long").alias("r_tot"),
         )
-        return counts, totals
+        return {"counts": counts, "totals": totals}
 
-    def _slice_store(self):
-        """Slice region for exactly-once streaming ingest (see
-        streaming/slicestore.py)."""
-        from dagster_etl_spark.streaming.slicestore import SliceStore
-
-        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-        return SliceStore(f"{warehouse}/{self.counts_table.lower()}__slices")
-
-    def ingest_slice(self, docs: DataFrame, slice_id: int, fault_hook=None) -> bool:
-        """Exactly-once ingest of one checkpoint-identified micro-batch
-        — same protocol as IncrementalUnigramLM.ingest_slice (r17: the
-        last two streamed incremental indexes get the slice-store path,
-        closing the replay double-count window for foreachBatch-fed
-        DSIR importance models)."""
-        store = self._slice_store()
-        if store.is_committed(slice_id):
-            return False
-        hook = fault_hook or (lambda _label: None)
+    def _stage_slice(self, docs, slice_id, stage) -> None:
         # aggregate outputs: AQE already coalesces their writes (see
-        # the BM25 ingest_slice note) — no explicit file budget
-        counts, totals = self._encode(docs)
-        store.write("counts", slice_id, counts)
-        hook("staged_counts")
-        store.write("totals", slice_id, totals)
-        hook("staged_totals")
-        store.commit(slice_id)
-        hook("post_commit")
-        return True
-
-    def compact_slices(self) -> int:
-        """Fold committed slice deltas into the bucketed base tables
-        and clear the region (post-stream, one fold — see the BM25
-        compact_slices caveat). Returns the number of slices folded."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
-
-        store = self._slice_store()
-        n = len(store.committed())
-        if n == 0:
-            return 0
-        counts = store.read(self.spark, "counts")
-        totals = store.read(self.spark, "totals")
-        first = not self.spark.catalog.tableExists(self.counts_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(self.spark, f"{warehouse}/{self.totals_table.lower()}")
-            write_bucketed(
-                counts, self.counts_table, ["fb"], num_buckets=self.num_buckets
-            )
-            totals.write.mode("overwrite").saveAsTable(self.totals_table)
-        else:
-            append_bucketed(counts, self.counts_table)
-            totals.write.mode("append").saveAsTable(self.totals_table)
-        store.clear()
-        return n
+        # the BM25 note) — no explicit file budget
+        for component, df in self._encode(docs).items():
+            stage(component, df)
 
     def ingest(self, docs: DataFrame) -> None:
         """Absorb one slice: append its per-bucket target/raw counts
         and a totals row. O(slice), append-only. Batch-grain path —
         inside foreachBatch use :meth:`ingest_slice`."""
-        from dagster_etl_spark.sources.bucketed import (
-            append_bucketed,
-            write_bucketed,
-        )
+        self._write_base(self._encode(docs), reset=True)
 
-        counts, totals = self._encode(docs)
-        first = not self.spark.catalog.tableExists(self.counts_table)
-        if first:
-            from dagster_etl_spark.sources.lake import delete_path
-
-            self.drop()
-            warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
-            delete_path(self.spark, f"{warehouse}/{self.totals_table.lower()}")
-            write_bucketed(
-                counts, self.counts_table, ["fb"], num_buckets=self.num_buckets
-            )
-        else:
-            append_bucketed(counts, self.counts_table)
-        totals.write.mode("overwrite" if first else "append").saveAsTable(
-            self.totals_table
-        )
-
-    def _standing(self) -> tuple[DataFrame, DataFrame]:
-        """Summed standing state = bucketed base tables ∪ committed
-        slice deltas (the BM25 _state pattern); plain refreshed table
-        read when no slice region exists."""
-        store = self._slice_store()
-        parts: list[DataFrame] = []
-        for t, comp in (
-            (self.counts_table, "counts"),
-            (self.totals_table, "totals"),
-        ):
-            base = None
-            if self.spark.catalog.tableExists(t):
-                self.spark.catalog.refreshTable(t)
-                base = self.spark.table(t)
-            delta = store.read(self.spark, comp)
-            if base is not None and delta is not None:
-                parts.append(base.unionByName(delta))
-            elif base is not None:
-                parts.append(base)
-            elif delta is not None:
-                parts.append(delta)
-            else:
-                raise ValueError(
-                    f"IncrementalDSIRModel: no state for {t} — neither a "
-                    "base table nor a committed slice exists"
-                )
-        st = parts[0].groupBy("fb").agg(
+    def _summed(self) -> tuple[DataFrame, DataFrame]:
+        """Summed standing state (ct/cr per bucket, totals) over the
+        base tables ∪ committed slice deltas."""
+        counts, totals = self._state("counts", "totals")
+        st = counts.groupBy("fb").agg(
             F.sum("ct").cast("long").alias("ct"),
             F.sum("cr").cast("long").alias("cr"),
         )
-        tot = parts[1].agg(
+        tot = totals.agg(
             F.sum("t_tot").cast("long").alias("t_tot"),
             F.sum("r_tot").cast("long").alias("r_tot"),
         )
@@ -2279,7 +1946,7 @@ class IncrementalDSIRModel:
         (ct, cr, totals) read from the summed state."""
         from pyspark.sql.window import Window
 
-        st, tot = self._standing()
+        st, tot = self._summed()
         qlog = x.floor_log2_ratio(
             f"(COALESCE(ct, 0) + 1) * (r_tot + {self.n_buckets})",
             f"(COALESCE(cr, 0) + 1) * (t_tot + {self.n_buckets})",
@@ -2313,16 +1980,6 @@ class IncrementalDSIRModel:
             .filter(F.col("weight_q") >= F.coalesce(F.col("t_k"), F.lit(-(1 << 62))))
             .select(self.id_col, self.lang_col, "n_features", "weight_q")
         )
-
-    def compact(self) -> dict[str, tuple[int, int]]:
-        from dagster_etl_spark.sources.bucketed import compact_bucketed
-
-        return {self.counts_table: compact_bucketed(self.spark, self.counts_table)}
-
-    def drop(self) -> None:
-        for t in (self.counts_table, self.totals_table):
-            self.spark.sql(f"DROP TABLE IF EXISTS {t}")
-        self._slice_store().clear()
 
 
 # -- fastText-shape quality classifier ----------------------------------------

@@ -48,14 +48,17 @@ def run_recoverable_ingest(
     """One availableNow pass over the parquet drop directory ``in_dir``
     (maxFilesPerTrigger=1 ⇒ one file per micro-batch), checkpointed at
     ``ckpt_dir``. ``ingest_slice(batch_df, batch_id, fault_hook=...)``
-    must be an exactly-once slice ingest (IncrementalBM25Index /
-    IncrementalNearDupIndex ``ingest_slice``).
+    must be an exactly-once slice ingest: the ``ingest_slice`` of any
+    :class:`~dagster_etl_spark.streaming.slicestore.SlicedIndex` (the
+    BM25, unigram-LM, DSIR, near-dup, float-IVF and IVF-PQ indexes).
 
     ``fail_at=(batch_id, label)`` raises :class:`InjectedFault` inside
-    foreachBatch when that batch's ingest reaches that stage label
-    (labels: staged_* per component, post_commit), failing the stream
-    exactly as a process kill at that point would. Call again with the
-    same ``ckpt_dir`` and ``fail_at=None`` to recover. Raises
+    foreachBatch when that batch's ingest reaches that stage label,
+    failing the stream exactly as a process kill at that point would.
+    The labels come from the index's component declaration:
+    ``staged_<component>`` after each component is staged, in the order
+    its staging body stages them, then ``post_commit``. Call again with
+    the same ``ckpt_dir`` and ``fail_at=None`` to recover. Raises
     ``StreamingQueryException`` (cause: InjectedFault) on the failing
     pass."""
     schema = spark.read.parquet(in_dir).schema

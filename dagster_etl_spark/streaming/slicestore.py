@@ -1,14 +1,13 @@
 """Manifest-committed slice store: the exactly-once substrate for
-streaming index ingest.
+streaming index ingest, and the one protocol every incremental index
+runs it through.
 
-Problem (r15 verdict, "What's missing" #2): the incremental indexes
-(``IncrementalBM25Index``, ``IncrementalNearDupIndex``) append to their
-standing tables inside ``foreachBatch``. Structured Streaming's
-checkpoint gives at-least-once delivery to ``foreachBatch`` — after a
-crash mid-batch, the SAME batch id is replayed on restart, and a plain
-append would re-append whatever portion of the slice already landed.
-The docstrings promised "the checkpointed batch id gates re-execution";
-this module is that gate, made crash-safe for a fault at ANY point:
+Problem (r15 verdict, "What's missing" #2): an incremental index
+appending to its standing tables inside ``foreachBatch`` is only
+at-least-once. Structured Streaming's checkpoint replays the SAME batch
+id after a crash mid-batch, and a plain append would re-append
+whatever portion of the slice already landed. :class:`SliceStore` is
+the gate, crash-safe for a fault at ANY point:
 
 * each micro-batch's state lands in a **slice directory keyed by the
   checkpointed batch id**, written with ``mode("overwrite")`` — a
@@ -29,13 +28,40 @@ the recovered standing state is bit-identical to an uninterrupted run
 — the property tests/test_streaming_recovery.py proves by killing a
 stream mid-batch and restarting it from the checkpoint.
 
+HOW AN INDEX JOINS (:class:`SlicedIndex`). The protocol lives here
+once; an index subclasses :class:`SlicedIndex` and supplies two things:
+
+1. **Its component declaration** — ``self.components``, a tuple of
+   ``(component, table, bucket_cols | None)`` set in ``__init__``. Each
+   component is one standing catalog table; ``bucket_cols`` makes it a
+   bucketed table (``write_bucketed`` / ``append_bucketed``), ``None``
+   a plain one. The FIRST entry's table is the anchor: the slice region
+   sits beside it at ``{warehouse}/{anchor}__slices``, and whether it
+   exists decides fresh write vs. append.
+2. **Its staging body** — ``_stage_slice(data, slice_id, stage, ...)``,
+   which computes each component of one micro-batch and hands it to
+   ``stage(component, df, files=None)``. ``stage`` writes the slice
+   directory and then fires the ``staged_<component>`` fault hook, so
+   the hook labels come from the declaration. A body may read a
+   component it already staged back through :meth:`SlicedIndex._staged`
+   (near-dup derives bands from its staged hashes, BM25 its df from its
+   staged postings).
+
+Everything else is derived from the declaration: the ``ingest_slice``
+envelope (``is_committed`` → staging body → ``commit`` →
+``post_commit``), the standing read (:meth:`SlicedIndex._standing`:
+refreshed base table ∪ committed slices), the fresh-or-append base
+writer shared by ``compact_slices`` and batch ``ingest``
+(:meth:`SlicedIndex._write_base`), ``compact_slices``, ``compact`` and
+``drop``.
+
 Scale posture: the slice region is the index's write-ahead delta (an
-LSM level-0); ``compact_slices`` on the owning index folds committed
-slices into the bucketed base tables to restore the pure co-located
-query plan. On a real cluster the manifest's atomic replace maps to a
-conditional put / metastore transaction (Iceberg & Delta implement
-exactly this commit protocol); on the local filesystem ``os.replace``
-is the honest equivalent.
+LSM level-0); ``compact_slices`` folds committed slices into the
+bucketed base tables to restore the pure co-located query plan. On a
+real cluster the manifest's atomic replace maps to a conditional put /
+metastore transaction (Iceberg & Delta implement exactly this commit
+protocol); on the local filesystem ``os.replace`` is the honest
+equivalent.
 
 Reference parity note: the reference has no streaming at all
 (SURVEY §2.7); its recovery story is idempotent daily REPROCESSING
@@ -49,8 +75,16 @@ from __future__ import annotations
 import json
 import os
 import tempfile
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+
+from dagster_etl_spark.sources.bucketed import (
+    append_bucketed,
+    compact_bucketed,
+    write_bucketed,
+)
+from dagster_etl_spark.sources.lake import delete_path
 
 
 def _local(path: str) -> str:
@@ -71,17 +105,19 @@ def slice_file_budget(batch_df: DataFrame) -> int:
     and the committed-slice union pays the per-file open cost again on
     EVERY subsequent probe. Budget = the number of input splits feeding
     the micro-batch (scales with batch bytes — a file-sourced trigger
-    splits by size), clamped to [1, defaultParallelism]; non-file
-    sources fall back to the batch's partition count. Measured at
-    sf0.1: 0.7–0.9 s -> 0.5–0.6 s per staged write with identical rows.
+    splits by size), clamped to [1, defaultParallelism]. A frame with
+    no file relation reports no input files (``inputFiles()`` returns
+    an empty list rather than raising — in-memory frames, and the
+    micro-batch ``foreachBatch`` hands over, which Spark re-plans as a
+    non-file relation), so it falls back to its partition count. A
+    still-streaming frame is a caller error and its AnalysisException
+    propagates. Measured at sf0.1: 0.7–0.9 s -> 0.5–0.6 s per staged
+    write with identical rows.
 
     Do NOT use it for aggregate/join outputs: their trailing shuffle is
     AQE-coalesced already (measured 1 part-file as-is) and the
     repartition would only add a shuffle."""
-    try:
-        n = len(batch_df.inputFiles())
-    except Exception:
-        n = 0
+    n = len(batch_df.inputFiles())
     if n <= 0:
         n = batch_df.rdd.getNumPartitions()
     par = batch_df.sparkSession.sparkContext.defaultParallelism
@@ -214,3 +250,201 @@ class SliceStore:
         import shutil
 
         shutil.rmtree(_local(self.root), ignore_errors=True)
+
+
+class SlicedIndex:
+    """Base of the incremental indexes: the slice-store protocol derived
+    from a component declaration (module docstring, "How an index
+    joins"). A subclass sets ``spark``, ``num_buckets`` and
+    ``components`` in ``__init__`` and implements :meth:`_stage_slice`;
+    one whose ``ingest_slice`` takes extra arguments overrides it as a
+    thin call to :meth:`_commit_slice`."""
+
+    spark: SparkSession
+    num_buckets: int
+    #: ((component, table, bucket_cols | None), ...) — the first
+    #: entry's table is the anchor.
+    components: tuple[tuple[str, str, list[str] | None], ...]
+
+    def _table(self, component: str) -> str:
+        return {c: table for c, table, _ in self.components}[component]
+
+    def _slice_store(self) -> SliceStore:
+        """The slice region, beside the anchor table in the warehouse so
+        drop()/rebuild semantics match."""
+        warehouse = self.spark.conf.get("spark.sql.warehouse.dir")
+        return SliceStore(f"{warehouse}/{self.components[0][1].lower()}__slices")
+
+    # -- exactly-once ingest ------------------------------------------------
+
+    def _stage_slice(self, docs: DataFrame, slice_id: int, stage, **opts) -> None:
+        """Compute one micro-batch's components and hand each to
+        ``stage(component, df, files=None)``. Must be deterministic: a
+        replay re-stages identical rows."""
+        raise NotImplementedError
+
+    def ingest_slice(self, docs: DataFrame, slice_id: int, fault_hook=None) -> bool:
+        """Exactly-once ingest of one checkpoint-identified micro-batch
+        (``slice_id`` = the foreachBatch batch id); ``docs`` is the
+        batch (documents, or vectors for the ANN indexes). Crash-safe
+        at any point: components land in overwrite-mode slice
+        directories and become visible only at the atomic manifest
+        commit. A replay of a committed slice returns False and applies
+        nothing, so recovery from a kill at any point yields state
+        bit-identical to an uninterrupted run
+        (tests/test_streaming_recovery.py kills and restarts for real).
+
+        ``fault_hook(label)`` is a test-only injection point called
+        after each staged component (``staged_<component>``) and after
+        the commit (``post_commit``)."""
+        return self._commit_slice(docs, slice_id, fault_hook)
+
+    def _commit_slice(
+        self, docs: DataFrame, slice_id: int, fault_hook=None, **opts
+    ) -> bool:
+        """The ``ingest_slice`` envelope: ``is_committed`` → staging body
+        (``opts`` are passed to it) → every declared component staged →
+        ``commit`` → ``post_commit``."""
+        store = self._slice_store()
+        if store.is_committed(slice_id):
+            return False
+        hook = fault_hook or (lambda _label: None)
+        staged: set[str] = set()
+
+        def stage(component: str, df: DataFrame, files: int | None = None) -> None:
+            store.write(component, slice_id, df, files=files)
+            staged.add(component)
+            hook(f"staged_{component}")
+
+        self._stage_slice(docs, slice_id, stage, **opts)
+        missing = [c for c, _, _ in self.components if c not in staged]
+        if missing:
+            raise RuntimeError(
+                f"{type(self).__name__}: slice {slice_id} staged without "
+                f"{missing}; refusing to commit it"
+            )
+        store.commit(slice_id)
+        hook("post_commit")
+        return True
+
+    def _staged(self, spark: SparkSession, component: str, slice_id: int) -> DataFrame:
+        """Read back a component this slice already staged."""
+        return self._slice_store().read_slice(spark, component, slice_id)
+
+    # -- standing state -----------------------------------------------------
+
+    def _standing(
+        self,
+        component: str,
+        extra: DataFrame | None = None,
+        spark: SparkSession | None = None,
+    ) -> DataFrame | None:
+        """Refreshed base table ∪ committed slices ∪ ``extra``; None when
+        none of them exists. With no slice region this is exactly the
+        plain refreshed table read, so a batch-built index keeps its
+        bucketed co-located plan; slice deltas ride along unbucketed
+        until compact_slices folds them.
+
+        ``spark`` defaults to the index's session. Pass the micro-batch's
+        own session inside foreachBatch: a session's relation cache is
+        not invalidated by another session's append."""
+        spark = spark or self.spark
+        table = self._table(component)
+        parts: list[DataFrame] = []
+        if spark.catalog.tableExists(table):
+            spark.catalog.refreshTable(table)
+            parts.append(spark.table(table))
+        delta = self._slice_store().read(spark, component)
+        parts += [p for p in (delta, extra) if p is not None]
+        return reduce(DataFrame.unionByName, parts) if parts else None
+
+    def _state(
+        self, *components: str, spark: SparkSession | None = None
+    ) -> tuple[DataFrame, ...]:
+        """:meth:`_standing` of each component, raising when one has no
+        state at all (nothing ingested yet)."""
+        out = []
+        for c in components:
+            df = self._standing(c, spark=spark)
+            if df is None:
+                raise ValueError(
+                    f"{type(self).__name__}: no state for {self._table(c)} — "
+                    "neither a base table nor a committed slice exists"
+                )
+            out.append(df)
+        return tuple(out)
+
+    # -- base tables --------------------------------------------------------
+
+    def _write_base(
+        self,
+        frames: dict[str, DataFrame],
+        fresh: bool | None = None,
+        reset: bool = False,
+    ) -> bool:
+        """Write ``frames`` ({component: df}) into the base tables in
+        declaration order; returns whether the write was fresh.
+
+        Fresh (``fresh``, by default: the anchor table does not exist):
+        a bucketed component goes through ``write_bucketed`` (which
+        clears its own orphaned location); a plain one gets its
+        orphaned location deleted, then ``saveAsTable(overwrite)`` — a
+        fresh session's catalog forgets tables whose directories
+        survived a previous session. Otherwise ``append_bucketed`` or a
+        plain append.
+
+        ``reset`` (batch ``ingest`` only) drops the whole old index
+        before a fresh write. compact_slices must never pass it: its
+        frames read the slice region lazily, so the region may only be
+        cleared after the base write."""
+        spark = self.spark
+        if fresh is None:
+            fresh = not spark.catalog.tableExists(self.components[0][1])
+        if fresh and reset:
+            self.drop()
+        warehouse = spark.conf.get("spark.sql.warehouse.dir")
+        for component, table, bucket_cols in self.components:
+            df = frames.get(component)
+            if df is None:
+                continue
+            if not fresh and bucket_cols:
+                append_bucketed(df, table)
+            elif not fresh:
+                df.write.mode("append").saveAsTable(table)
+            elif bucket_cols:
+                write_bucketed(df, table, bucket_cols, num_buckets=self.num_buckets)
+            else:
+                delete_path(spark, f"{warehouse}/{table.lower()}")
+                df.write.mode("overwrite").saveAsTable(table)
+        return fresh
+
+    def compact_slices(self) -> int:
+        """Fold committed slice deltas into the base tables and clear the
+        region, restoring the pure co-located query plan. Returns the
+        number of slices folded. Batch-grain step: the window between
+        the base write and the region clear is not crash-safe on plain
+        parquet (a rerun would double-fold) — in production this fold
+        is one ACID table commit (Iceberg/Delta); locally run it once,
+        post-stream."""
+        store = self._slice_store()
+        n = len(store.committed())
+        if n == 0:
+            return 0
+        self._write_base({c: store.read(self.spark, c) for c, _, _ in self.components})
+        store.clear()
+        return n
+
+    def compact(self) -> dict[str, tuple[int, int]]:
+        """Maintenance cadence: collapse the per-append files of every
+        bucketed table without touching its bucket spec, so probe joins
+        stay co-located. Returns {table: (files_before, files_after)}."""
+        return {
+            table: compact_bucketed(self.spark, table)
+            for _, table, bucket_cols in self.components
+            if bucket_cols
+        }
+
+    def drop(self) -> None:
+        for _, table, _ in self.components:
+            self.spark.sql(f"DROP TABLE IF EXISTS {table}")
+        self._slice_store().clear()

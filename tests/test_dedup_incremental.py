@@ -203,3 +203,24 @@ def test_probe_external_matches_one_shot_and_is_read_only(idx_env):
         for t in (idx.bands_table, idx.hashes_table, idx.pairs_table)
     }
     assert after == before, "probe_external mutated the index"
+
+
+def test_ingest_leaves_nothing_cached(idx_env):
+    """The eager ingest pins its melted bands frame for its two
+    consumers (index write and probe) and releases it before
+    returning, on the fresh path and the append path alike, instead
+    of leaving it in the session-wide pin registry."""
+    from pyspark.sql import functions as F
+
+    from dagster_etl_spark.plans.cache import _TRACKED, release_pinned
+    from dagster_etl_spark.sources.fixtures import load_table
+
+    spark, idx = idx_env
+    docs = load_table(spark, SF_SMALL, "documents")
+    release_pinned()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for day in range(2):
+        idx.ingest(docs.filter(F.col("doc_id") % 2 == day), threshold=THRESH)
+        assert cache.isEmpty() and not _TRACKED
+    assert idx.pairs().count() > 0

@@ -56,7 +56,9 @@ def _run_expect_fault(spark, in_dir, ckpt, ingest, fail_at):
 # -- BM25 ---------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("fail_label", ["staged_postings", "staged_totals"])
+@pytest.mark.parametrize(
+    "fail_label", ["staged_postings", "staged_df", "staged_totals"]
+)
 def test_bm25_kill_mid_staging_then_restart_equals_oneshot(
     spark, tmp_path, fail_label
 ):
@@ -147,11 +149,22 @@ def test_bm25_staged_df_equals_direct_count(spark, tmp_path):
 
     from dagster_etl_spark.operators.text import IncrementalBM25Index
     from dagster_etl_spark.functions import xdialect as x
+    from dagster_etl_spark.streaming.recovery import InjectedFault
 
     docs = _docs(spark).filter("doc_id % 4 = 1")
     idx = IncrementalBM25Index(spark, "rcv_bm25_dfderive")
     idx.drop()
     store = idx._slice_store()
+
+    def kill_after_postings(label):
+        if label == "staged_postings":
+            raise InjectedFault(label)
+
+    # killed between the staged postings and the staged df: the slice
+    # stays uncommitted, and the replay re-stages both
+    with pytest.raises(InjectedFault):
+        idx.ingest_slice(docs, 0, fault_hook=kill_after_postings)
+    assert store.committed() == []
     assert idx.ingest_slice(docs, 0) is True
     staged_df = store.read_slice(spark, "df", 0)
     direct = (
@@ -164,11 +177,60 @@ def test_bm25_staged_df_equals_direct_count(spark, tmp_path):
     idx.drop()
 
 
+def test_bm25_ingest_slice_rejects_repeated_doc_id(spark):
+    """The staged df counts postings rows per term, which equals the
+    distinct-document count only when doc_id is unique in the slice:
+    a repeated doc_id is refused before anything is staged, and the
+    slice stays uncommitted."""
+    from dagster_etl_spark.operators.text import IncrementalBM25Index
+
+    docs = _docs(spark, n=20).select("doc_id", "text")
+    idx = IncrementalBM25Index(spark, "rcv_bm25_dupid")
+    idx.drop()
+    dup = docs.unionByName(
+        docs.limit(1).selectExpr("doc_id", "'other words' AS text")
+    )
+    with pytest.raises(ValueError, match="repeats doc_id"):
+        idx.ingest_slice(dup, 0)
+    assert idx._slice_store().committed() == []
+    idx.drop()
+
+
+def test_bm25_ingest_slice_accepts_zero_token_docs(spark):
+    """A zero-token document has a totals row but no postings; it is
+    not a repeated doc_id and must not trip the uniqueness check. The
+    staged state still equals the batch ingest's."""
+    from dagster_etl_spark.operators.text import IncrementalBM25Index
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta beta"), (2, ""), (3, "   "), (4, "beta gamma")],
+        "doc_id BIGINT, text STRING",
+    )
+    sliced = IncrementalBM25Index(spark, "rcv_bm25_zero_sliced")
+    batch = IncrementalBM25Index(spark, "rcv_bm25_zero_batch")
+    for idx in (sliced, batch):
+        idx.drop()
+    assert sliced.ingest_slice(docs, 0) is True
+    batch.ingest(docs)
+    components = ("postings", "df", "totals")
+    for got, want in zip(sliced._state(*components), batch._state(*components)):
+        assert _rows(got) == _rows(want)
+    assert _rows(sliced._state("totals")[0]) == [(4, 5)]
+    for idx in (sliced, batch):
+        idx.drop()
+
+
 # -- MinHash near-dup ---------------------------------------------------------
 
 
 @pytest.mark.parametrize(
-    "fail_at", [(2, "staged_bands"), (2, "staged_pairs"), (1, "post_commit")]
+    "fail_at",
+    [
+        (2, "staged_hashes"),
+        (2, "staged_bands"),
+        (2, "staged_pairs"),
+        (1, "post_commit"),
+    ],
 )
 def test_neardup_kill_restart_equals_oneshot(spark, tmp_path, fail_at):
     """Kill the near-dup ingest mid-staging / after-pairs-staged /
@@ -641,3 +703,124 @@ def test_slicestore_read_raises_on_missing_committed_slice(spark, tmp_path):
     shutil.rmtree(store.slice_path("counts", 1))
     with pytest.raises(FileNotFoundError, match="manifest-committed"):
         store.read(spark, "counts")
+
+
+def test_slice_file_budget_counts_input_files_of_a_file_backed_frame(
+    spark, tmp_path
+):
+    """A file-backed frame is budgeted by its input-file count."""
+    from dagster_etl_spark.streaming.slicestore import slice_file_budget
+
+    path = str(tmp_path / "three")
+    spark.range(30).repartition(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 3
+    assert slice_file_budget(df) == 3
+
+
+def test_slice_file_budget_uses_partitions_of_an_in_memory_frame(spark):
+    """A frame with no file relation reports no input files and falls
+    back to its partition count; a still-streaming frame is a caller
+    error whose AnalysisException propagates."""
+    from pyspark.errors import AnalysisException
+
+    from dagster_etl_spark.streaming.slicestore import slice_file_budget
+
+    df = spark.range(0, 40, numPartitions=3)
+    assert df.inputFiles() == []
+    assert slice_file_budget(df) == 3
+    with pytest.raises(AnalysisException):
+        slice_file_budget(spark.readStream.format("rate").load())
+
+
+# -- the protocol itself, on a toy index --------------------------------------
+
+
+def _toy_index(spark, name, skip=None):
+    """Two components: bucketed ``keys`` (the anchor) and plain
+    ``notes``; the staging body stages them in declaration order,
+    leaving out ``skip``."""
+    from dagster_etl_spark.streaming.slicestore import SlicedIndex
+
+    class ToyIndex(SlicedIndex):
+        def __init__(self) -> None:
+            self.spark = spark
+            self.num_buckets = 2
+            self.components = (
+                ("keys", f"{name}_keys", ["k"]),
+                ("notes", f"{name}_notes", None),
+            )
+
+        def _stage_slice(self, docs, slice_id, stage) -> None:
+            for component, cols in (("keys", ["k"]), ("notes", ["k", "v"])):
+                if component != skip:
+                    stage(component, docs.select(*cols))
+
+    idx = ToyIndex()
+    idx.drop()
+    return idx
+
+
+def _toy_rows(spark, lo, hi):
+    return spark.range(lo, hi).selectExpr("id AS k", "CAST(id * 10 AS STRING) AS v")
+
+
+def test_sliced_index_protocol_on_a_toy_index(spark):
+    """SlicedIndex derives ingest_slice, _standing and compact_slices
+    from the declaration: hooks fire per staged component in
+    declaration order then post_commit; a committed replay returns
+    False and writes nothing; the standing view is base ∪ committed
+    slices with an uncommitted slice invisible; compact_slices folds
+    the committed slices into the base tables and clears the region."""
+    from dagster_etl_spark.sources.bucketed import bucket_spec
+    from dagster_etl_spark.streaming.recovery import InjectedFault
+
+    idx = _toy_index(spark, "rcv_toy")
+    store = idx._slice_store()
+    assert idx._standing("keys") is None
+    with pytest.raises(ValueError, match="no state"):
+        idx._state("keys")
+    base = _toy_rows(spark, 0, 3)
+    assert idx._write_base({"keys": base.select("k"), "notes": base}) is True
+
+    labels: list[str] = []
+    assert idx.ingest_slice(_toy_rows(spark, 3, 5), 0, fault_hook=labels.append)
+    assert labels == ["staged_keys", "staged_notes", "post_commit"]
+
+    replay: list[str] = []
+    assert not idx.ingest_slice(_toy_rows(spark, 50, 60), 0, fault_hook=replay.append)
+    assert replay == []
+    assert _rows(store.read_slice(spark, "notes", 0)) == _rows(_toy_rows(spark, 3, 5))
+
+    def kill(label):
+        if label == "staged_notes":
+            raise InjectedFault(label)
+
+    with pytest.raises(InjectedFault):
+        idx.ingest_slice(_toy_rows(spark, 5, 7), 1, fault_hook=kill)
+    assert store.committed() == [0]
+    want = _rows(_toy_rows(spark, 0, 5))
+    assert _rows(idx._standing("notes")) == want
+    extra = _toy_rows(spark, 9, 10)
+    assert _rows(idx._standing("notes", extra)) == want + _rows(extra)
+
+    assert idx.compact_slices() == 1
+    assert store.committed() == []
+    assert not os.path.exists(store.slice_path("keys", 0))
+    assert _rows(spark.table("rcv_toy_notes")) == want
+    assert _rows(idx._standing("keys")) == [(k,) for k in range(5)]
+    assert bucket_spec(spark, "rcv_toy_keys") == (2, ["k"], [])
+    assert idx.compact_slices() == 0
+    idx.drop()
+    assert not spark.catalog.tableExists("rcv_toy_keys")
+
+
+def test_sliced_index_refuses_to_commit_a_partly_staged_slice(spark):
+    """A staging body that skips a declared component would commit a
+    slice that every later read of that component rejects; the
+    envelope refuses the commit instead."""
+    idx = _toy_index(spark, "rcv_toy_skip", skip="notes")
+    with pytest.raises(RuntimeError, match="staged without"):
+        idx.ingest_slice(_toy_rows(spark, 0, 2), 0)
+    assert idx._slice_store().committed() == []
+    idx.drop()
